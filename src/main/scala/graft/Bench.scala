@@ -1,76 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // bench mode: sketch hashes switch md5 -> xxhash64 (same plan shape and
-    // cardinalities, ~5x less hash cost); oracle runs (Verify) keep md5 so
-    // DuckDB can reproduce every bit.
-    System.setProperty("graft.fastHash", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the suite (default 100): the
-      // interleaved-pass protocol runs ~195 distinct plans per pass, so
-      // at the default size every pass evicts everything and every query
-      // re-pays generated-class compilation each rep (~50 s across the
-      // suite, measured). A long-lived production driver running a
-      // recurring query set would size this the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // data-derived reduce parallelism (guide §2.2): with the default
-      // parallelismFirst=true, AQE coalesces post-shuffle partitions only
-      // down to the core count, so every reduce stage inherits cpus-many
-      // near-empty tasks whatever the data volume — the round-21 scaling
-      // block measured the FULL SUITE faster at 8 cores than 32 purely on
-      // that per-task fixed cost. parallelismFirst=false makes AQE honor
-      // the advisory target size instead, so reduce partition counts are
-      // a function of measured shuffle bytes — the same sizing rule that
-      // governs last-stage aggregates at 100 TB (a 6.4 TB shuffle still
-      // fans out to ~100k partitions at the 64 MB default; a 100 KB one
-      // no longer pays 32 empty tasks). Advisory size is env-overridable
-      // so cluster runs can tune bytes-per-task without a rebuild.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one-time layout ETL (bucketed tables, the IVF index), fixture
-    // staging (text/csv/jsonl files, the streaming landing dir), and the
-    // shared fit-verification yardstick all run OUTSIDE the timings:
-    // join_bucketed must measure the exchange-free join (not the CTAS),
-    // the scan_*/streaming_* queries the scan (not the staging write),
-    // and kmeans_fit the MLlib fit (not the memo fill of the reference-
-    // Lloyd cost its three variants share — round-7 ADVICE).
-    // each setup stage fails in ISOLATION: queries self-ensure their own
-    // staging, so a broken stage here costs those queries (their ensure
-    // re-throws inside the per-query try) — never the whole round. Round
-    // 11's bench died in THIS block on a fixture encoding change and
-    // zeroed every number.
-    // NonFatal only: an OOM/LinkageError leaves the JVM in a state where
-    // every subsequent timing is garbage — better the rc=1 than a full
-    // round of numbers from a corrupted session
-    def setup(what: String)(body: => Unit): Unit =
-      try body catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] setup $what failed " +
-            s"(continuing; affected queries will fail individually): $e")
-      }
-    setup("bucketed layouts") {
-      graft.sources.StorageOps.ensureLayouts(spark, sfDir)
-      graft.sources.StorageOps.ensureRebucketed(spark, sfDir) }
-    setup("text fixtures") { graft.sources.TextIO.ensureFixtures(spark, sfDir) }
-    setup("streaming landing dir") {
-      graft.streaming.StreamingOps.stageDir(spark, sfDir, "events")
-      graft.streaming.StreamingOps.stageDir(spark, sfDir, "documents"); () }
-    setup("ivf index") {
-      graft.operators.SimilarityOps.ensureIvfIndex(spark, sfDir); () }
-    setup("export layouts") {
-      graft.operators.PipelineOps.ensureExportShards(spark, sfDir)
-      graft.sources.StorageOps.ensureBaseManifest(spark, sfDir); () }
-    setup("mllib ref warm") { graft.operators.MLlibKMeans.warmRef(spark, sfDir) }
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local()
+    import GraftSession.setup
+    GraftSession.ensureFixtures(spark, sfDir)
     // de-noise + de-serialize the fixture scans (round-12 verdict item 4,
     // extended r21): each fixture is one parquet row group, a 1-task scan
     // that amplifies host contention 4-10x (lineitem, BASELINE.md's
@@ -82,7 +17,7 @@ object Bench {
     // plan, not single-task scheduling luck. Bench-only: Verify and the
     // DuckDB oracle keep reading the fixture bytes directly.
     setup("multi-rowgroup tables") {
-      BenchLayout.stage(spark, sfDir, cpus.toInt)
+      BenchLayout.stage(spark, sfDir, cpus)
     }
     // one untimed scan+aggregate+noop-write warmup: whole-session JIT,
     // codegen compilation, parquet-reader and noop-sink init otherwise all
@@ -158,23 +93,7 @@ object Bench {
     // median 2.6x over the clean truth at identical task counts.
     val samples: Seq[Seq[(String, Double, Long, Long)]] = (1 to reps).map { _ =>
       plans.map { case (name, fn) =>
-        // isolate measurements: caches AND checkpoint/persisted blocks built
-        // inside one query (iterative k-means loops, LSH band self-joins)
-        // must not linger into the next query's timing or accumulate storage
-        // across the full query sequence (dedup_ngram measured 12 s
-        // mid-sequence vs 5 s isolated before this). clearCache only empties
-        // the SQL CacheManager; localCheckpoint blocks are RDD-level and
-        // otherwise wait for driver GC + ContextCleaner (round-7 ADVICE), so
-        // drop them explicitly.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // sweep ivf_index_build's throwaway output here, outside any timed
-        // region: deleting the just-built index is teardown, not build ETL
-        // (round-8 ADVICE), and the cells df it returns is localCheckpoint-
-        // pinned so the files are not needed after the query returns
-        graft.sources.Staging.deleteRecursively(
-          java.nio.file.Paths.get("target/ivf-bench"))
+        GraftSession.isolate(spark)
         val (tasks0, sb0) = drained()
         val t0 = System.nanoTime()
         // noop-sink write: every row is fully materialized through the whole
@@ -218,8 +137,8 @@ object Bench {
     // one single-rep full-surface pass over an 8×-replicated fixture
     // (BenchLayout.stageScaleFixture — id-remapped unions, duplication
     // pressure preserved), so corpus-scaled regressions in old operators
-    // cannot hide behind sf0.1 fixed costs. UNTIMED staging mirrors the
-    // main setup; timings land in SEPARATE queries_8x/total_8x fields —
+    // cannot hide behind sf0.1 fixed costs. UNTIMED staging runs the same
+    // setup as 1×; timings land in SEPARATE queries_8x/total_8x fields —
     // the headline queries/total stay 1×-comparable across rounds.
     // Single rep by design: this block is a volume-scaling signal (is a
     // query's cost data-dominated or fixed-cost-dominated?), not a
@@ -228,52 +147,43 @@ object Bench {
     // ≥16 cores — the low-core bench invocation exists to measure CORE
     // scaling of the 1× suite, and paying the ~5-minute 8× pass twice
     // per round buys no extra signal there.
-    val scaleResults: Seq[(String, Double, Long)] =
+    // a query that throws here gets NO timing (its partial elapsed time
+    // would read as a fast run) and is counted in failed_8x instead
+    val scaleRuns: Option[Seq[(String, Option[(Double, Long)])]] =
       if (sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCK",
-          if (cpus.toInt >= 16) "1" else "0") == "0") Seq.empty
+          if (cpus >= 16) "1" else "0") == "0") None
       else try {
         val sf8 = BenchLayout.stageScaleFixture(spark, sfDir)
-        setup("scale: layouts") {
-          graft.sources.StorageOps.ensureLayouts(spark, sf8)
-          graft.sources.StorageOps.ensureRebucketed(spark, sf8) }
-        setup("scale: text fixtures") {
-          graft.sources.TextIO.ensureFixtures(spark, sf8) }
-        setup("scale: streaming landing dir") {
-          graft.streaming.StreamingOps.stageDir(spark, sf8, "events")
-          graft.streaming.StreamingOps.stageDir(spark, sf8, "documents"); () }
-        setup("scale: ivf index") {
-          graft.operators.SimilarityOps.ensureIvfIndex(spark, sf8); () }
-        setup("scale: export layouts") {
-          graft.operators.PipelineOps.ensureExportShards(spark, sf8)
-          graft.sources.StorageOps.ensureBaseManifest(spark, sf8); () }
-        setup("scale: mllib ref warm") {
-          graft.operators.MLlibKMeans.warmRef(spark, sf8) }
         // the scaled fixture is written at data-proportional split
-        // counts; the 1× staging overrides must not redirect its reads
+        // counts; the 1× staging overrides must not redirect its reads,
+        // its setup ETL's included
         BenchLayout.clearOverrides()
-        plans.map { case (name, fn) =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          graft.sources.Staging.deleteRecursively(
-            java.nio.file.Paths.get("target/ivf-bench"))
+        GraftSession.ensureFixtures(spark, sf8)
+        Some(plans.map { case (name, fn) =>
+          GraftSession.isolate(spark)
           val (tasks0, _) = drained()
           val t0 = System.nanoTime()
-          try fn(spark, sf8).write.mode("overwrite").format("noop").save()
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name (8x) FAILED: $e")
-          }
+          val ok =
+            try {
+              fn(spark, sf8).write.mode("overwrite").format("noop").save()
+              true
+            } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name (8x) FAILED: $e")
+                false
+            }
           val sec = (System.nanoTime() - t0) / 1e9
           graft.streaming.StreamingOps.lastRunStats.clear()
           val (tasks1, _) = drained()
-          (name, sec, tasks1 - tasks0)
-        }
+          (name, Option.when(ok)((sec, tasks1 - tasks0)))
+        })
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] scale block failed (skipping): $e")
-          Seq.empty
+          None
       }
+    val scaleResults = scaleRuns.toSeq.flatten
+      .collect { case (k, Some((sec, n))) => (k, sec, n) }
     // medians print at millisecond precision: the full-precision double
     // rendering ("0.6337469860000001") more than doubled each entry and
     // pushed most of the seconds map outside the judged artifact's
@@ -296,17 +206,19 @@ object Bench {
         s"\"batches\":${st.batches}}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // scale-block fields render only when the block ran: queries_8x /
-    // tasks_8x / total_8x sit EARLY in the line (right after sf) so the
-    // judged stdout tail still ends with the 1× seconds map + totals
+    // scale-block fields render only when the block ran: failed_8x /
+    // total_8x / tasks_8x / queries_8x sit EARLY in the line (right after
+    // sf) so the judged stdout tail still ends with the 1× seconds map +
+    // totals
     val q8 = scaleResults.map { case (k, v, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val t8 = scaleResults.map { case (k, _, n) => s"\"" + k + "\":" + n }
       .mkString("{", ",", "}")
     val total8 = r3(scaleResults.map(_._2).sum)
-    val scaleFields =
-      if (scaleResults.isEmpty) ""
-      else s""""total_8x":$total8,"tasks_8x":$t8,"queries_8x":$q8,"""
+    val scaleFields = scaleRuns.fold("") { runs =>
+      val failed8 = runs.count(_._2.isEmpty)
+      s""""failed_8x":$failed8,"total_8x":$total8,"tasks_8x":$t8,"queries_8x":$q8,"""
+    }
     // field order is load-bearing (round-10 verdict #4): the judged view of
     // this line keeps only the LAST ~2000 stdout chars, so the per-query
     // SECONDS map goes after the tasks map — the truncation window then

@@ -30,36 +30,18 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** 60-bit base hash of a string. Two modes:
-    *  - oracle (default): md5-derived, identical in both engines —
-    *    Spark `conv(substring(md5(s),1,15),16,10)::long` ==
-    *    DuckDB `('0x' || substring(md5(s),1,15))::BIGINT`.
-    *  - bench (`-Dgraft.fastHash=true`, set by [[graft.Bench]]): xxhash64
-    *    masked to 60 bits — same value range, same downstream plan shape and
-    *    bucket cardinalities, ~5x cheaper per token (md5-per-word was a 5x
-    *    bench regression in round 2). Results differ bit-wise between modes;
-    *    only Verify's md5 output is oracle-compared. */
-  // Captured ONCE at first use: reading the property per call would let a
-  // mode flip mid-JVM silently mix hash functions between plans (or flip
-  // later queries to bench hashes while the emitted oracle SQL stays md5).
-  // Bench.main sets the property before anything touches this object;
-  // everywhere else the mode is frozen to the oracle-reproducible default.
-  private lazy val fastHash: Boolean =
-    sys.props.get("graft.fastHash").contains("true")
-
+  /** 60-bit base hash of a string, md5-derived so both engines agree:
+    * Spark `conv(substring(md5(s),1,15),16,10)::long` ==
+    * DuckDB `('0x' || substring(md5(s),1,15))::BIGINT`. */
   def h60(c: Column): Column =
-    if (fastHash) xxhash64(c).bitwiseAND(lit((1L << 60) - 1))
-    else conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** DuckDB rendering of [[h60]] (oracle mode only). */
+  /** DuckDB rendering of [[h60]]. */
   def h60Sql(e: String): String =
     s"('0x' || substring(md5($e), 1, 15))::BIGINT"
 
-  /** Full-text digest for exact dedup: md5 when oracle-compared,
-    * xxhash64 in bench mode (grouping by a 64-bit digest has the same
-    * shuffle shape; only hash cost differs). */
-  def digest(c: Column): Column =
-    if (fastHash) xxhash64(c).cast("string") else md5(c)
+  /** Full-text digest for exact dedup (md5, oracle-reproducible). */
+  def digest(c: Column): Column = md5(c)
 
   /** Whitespace tokens with empties dropped (docs have trailing spaces).
     * Native one-pass tokenizer — result-identical to the
@@ -1050,8 +1032,7 @@ object DedupOps {
         .select(col("doc_id"), col("canon_url"), col("n_variants"))
     },
     "dedup_exact" -> { (s, d) =>
-      // hash-groupBy dedup: at 100 TB you group by a digest, never the raw
-      // text; see digest() for the md5-oracle vs xxhash64-bench split.
+      // hash-groupBy dedup: at 100 TB you group by a digest, never the raw text
       Tables.documents(s, d)
         .groupBy(digest(col("text")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
